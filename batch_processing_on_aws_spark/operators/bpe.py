@@ -38,6 +38,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .textstats import tokens
 
@@ -53,6 +54,32 @@ def _word_histogram(df: DataFrame, text_col: str) -> DataFrame:
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n"))
     )
+
+
+def _histogram_for(
+    df: DataFrame, text_col: str, word_histogram: DataFrame | None
+) -> DataFrame:
+    """The (word, n) histogram a tokenizer trainer runs on. Callers
+    training SEVERAL tokenizer families on the SAME corpus
+    (tokenizer_family_report) pass ``word_histogram`` so the
+    corpus-sized tokenize+explode+groupBy pass runs once, not once per
+    family; it must be ``_word_histogram(df, text_col)`` for the same
+    ``text_col``, already materialized (localCheckpoint/persist). Its
+    schema is checked here; its content is the caller's contract."""
+    if word_histogram is None:
+        return _word_histogram(df, text_col).localCheckpoint()
+    types = {f.name: f.dataType for f in word_histogram.schema.fields}
+    if not isinstance(types.get("word"), T.StringType):
+        raise ValueError(
+            "word_histogram needs a string 'word' column "
+            "(pass _word_histogram(df, text_col))"
+        )
+    if not isinstance(types.get("n"), T.IntegralType):
+        raise ValueError(
+            "word_histogram needs an integral 'n' column "
+            "(pass _word_histogram(df, text_col))"
+        )
+    return word_histogram
 
 
 def _symbolize(words: DataFrame) -> DataFrame:
@@ -208,20 +235,15 @@ def learn_bpe(
     counts can reach pair #1's count, so on ties a batched pair #2
     can differ from what sequential BPE would learn; only a recount
     between merges (which both paths here do) is bit-faithful.
+
+    ``word_histogram`` (optional): the precomputed
+    ``_word_histogram(df, text_col)`` for the SAME ``text_col``,
+    already materialized — shared by several trainers on one corpus.
+    A frame without a string ``word`` or an integral ``n`` column is
+    rejected with ValueError.
     """
     spark = df.sparkSession
-    # ``word_histogram`` (round-15): callers training SEVERAL
-    # tokenizer families on the SAME corpus (tokenizer_family_report)
-    # pass the one materialized (word, n) histogram so the
-    # corpus-sized tokenize+explode+groupBy pass runs once, not once
-    # per family. Must be exactly _word_histogram(df, text_col),
-    # already materialized (localCheckpoint/persist). Default None
-    # keeps the single-trainer behavior unchanged.
-    hist = (
-        word_histogram
-        if word_histogram is not None
-        else _word_histogram(df, text_col).localCheckpoint()
-    )
+    hist = _histogram_for(df, text_col, word_histogram)
     if (
         local_histogram_max_words
         and hist.count() <= local_histogram_max_words

@@ -31,7 +31,7 @@ merges onto it correctly) but :meth:`read` hides it, exactly as a
 recompute would show no row.
 
 Storage: the state table rides :class:`~..operators.merge.MergeWriter`
-(bucketed parquet, dynamic partition overwrite), so refresh is
+(a retention-1 keyed VersionedTable), so refresh is
 idempotent per batch ONLY if the caller keys batches (exactly-once
 delivery, e.g. Structured Streaming's foreachBatch epoch semantics or
 file-at-a-time ingestion). Re-applying the same rows twice
@@ -267,7 +267,7 @@ class IncrementalAgg:
         replaced = t.join(r, on=self._key_cond("t", "r"), how="left").select(
             *cols
         )
-        if not self.writer._exists(spark):
+        if self.writer.latest_version() == 0:
             self.writer.overwrite(replaced)
         else:
             self.writer.upsert(spark, replaced.localCheckpoint())
@@ -368,8 +368,8 @@ class IncrementalAgg:
         """Fold one append-only batch into the stored aggregate.
 
         Touched-groups-only (round-6 verdict task 3): the stored state
-        is read with partition pruning to the buckets the batch's
-        groups hash into, then SEMI-JOINED to the batch's group keys —
+        is read from just the files of the buckets the batch's groups
+        hash into, then SEMI-JOINED to the batch's group keys —
         so the merge input, the merged frame, and the upsert are all
         O(touched groups), never O(|state|). Untouched groups' parquet
         files are not read and not rewritten (byte-identical across a
@@ -400,33 +400,22 @@ class IncrementalAgg:
         checkpoint itself is tiny. The append path (apply_batch) keeps
         the default: its partial is one hash-agg over the batch, and
         an extra blocking job costs more than the recompute saves."""
-        from .merge import BUCKET_COL
-
-        if not self.writer._exists(spark):
+        if self.writer.latest_version() == 0:
             self.writer.overwrite(part)
             return
         if materialize:
             part = part.localCheckpoint(eager=True)
-        # prune state read to the buckets the batch can touch, then
-        # keep only the exact touched groups within those buckets
-        part_b = self.writer._bucketed(part)
-        touched = [
-            r[BUCKET_COL]
-            for r in part_b.select(BUCKET_COL).distinct().collect()
-        ]
-        old = (
-            spark.read.parquet(self.writer.path)
-            .where(F.col(BUCKET_COL).isin(touched))
-            .drop(BUCKET_COL)
-        )
+        # read only the buckets the batch can touch, then keep only the
+        # exact touched groups within those buckets
+        old = self.writer.touched_rows(spark, part)
         old_touched = old.alias("o").join(
             part.select(*self.keys).alias("p"),
             on=self._key_cond("o", "p"),
             how="left_semi",
         )
         state = merge_fn(old_touched, part)
-        # localCheckpoint cuts the self-read lineage before
-        # MergeWriter rewrites the touched buckets underneath it
+        # localCheckpoint cuts the state's lineage to the files the
+        # writer's retention-1 vacuum removes after the commit
         self.writer.upsert(spark, state.localCheckpoint())
 
     def read(self, spark: SparkSession) -> DataFrame:

@@ -15,14 +15,16 @@ contract to a single ``MERGE INTO`` statement instead
 
     upsert = new ∪ (old ⟕anti new on pk)   — new rows win
 
-Scale design: the table is hash-partitioned on a derived bucket of the
-primary key (``pk_bucket = pmod(hash(pk), n_buckets)``) and written
-with dynamic partition overwrite, so an incremental batch rewrites
-ONLY the buckets it touches — never the whole table. The anti-join
-reads just those buckets back (partition pruning on ``pk_bucket``),
-and the new side is bucket-tagged with the same function, so at
-100 TB a weekly increment costs O(increment × touched-buckets), not
-O(table).
+Storage: :class:`MergeWriter` is a retention-1
+:class:`~.versioned.VersionedTable` — the engine's one keyed
+bucketed-table core. Rows are hash-bucketed on the primary key, an
+increment rewrites ONLY the buckets its keys touch
+(reading back just those buckets' files for the anti-join), and every
+write lands as an atomic manifest commit, so a crash mid-write leaves
+the previous table intact instead of half-rewritten. After each commit
+the writer vacuums to the latest version, so the disk holds one
+version, as an in-place rewrite would. At 100 TB a weekly increment
+costs O(increment × touched-buckets), not O(table).
 """
 
 from __future__ import annotations
@@ -33,7 +35,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-BUCKET_COL = "__pk_bucket"
+from .versioned import VersionedTable
 
 
 def upsert_frames(
@@ -58,8 +60,16 @@ def upsert_frames(
     return new.unionByName(survivors.select(*old.columns))
 
 
-class MergeWriter:
-    """Idempotent keyed writer over bucket-partitioned Parquet.
+class MergeWriter(VersionedTable):
+    """Idempotent keyed writer: a :class:`VersionedTable` that keeps
+    only its latest version.
+
+    ``overwrite(df)`` is K1's full refresh (reference:
+    init-data-transformation.py:43,92); ``upsert(spark, new)`` is
+    K4/J3's keyed merge — null-safe keys, new rows win, and running the
+    same increment twice yields an identical table: the idempotency
+    contract the reference delegates to Redshift. ``read(spark)``
+    returns the current rows.
 
     ``n_buckets`` controls incremental-rewrite granularity: more
     buckets ⇒ smaller rewrites but more files. For a 100 TB table with
@@ -67,75 +77,10 @@ class MergeWriter:
     the tens-of-GB range.
     """
 
-    def __init__(self, path: str, keys: Sequence[str], n_buckets: int = 32):
-        self.path = path
-        self.keys = list(keys)
-        self.n_buckets = n_buckets
-
-    def _bucketed(self, df: DataFrame) -> DataFrame:
-        b = F.pmod(F.hash(*[F.col(k) for k in self.keys]), F.lit(self.n_buckets))
-        return df.withColumn(BUCKET_COL, b)
-
-    def _exists(self, spark: SparkSession) -> bool:
-        # Cheap existence probe via the JVM Hadoop FS API (works for
-        # local paths and object stores alike).
-        jvm = spark.sparkContext._jvm
-        conf = spark.sparkContext._jsc.hadoopConfiguration()
-        p = jvm.org.apache.hadoop.fs.Path(self.path)
-        return p.getFileSystem(conf).exists(p)
-
-    def read(self, spark: SparkSession) -> DataFrame:
-        return spark.read.parquet(self.path).drop(BUCKET_COL)
-
-    def overwrite(self, df: DataFrame) -> None:
-        """K1 — full refresh (reference: init-data-transformation.py:43,92)."""
-        (
-            self._bucketed(df)
-            .write.mode("overwrite")
-            .partitionBy(BUCKET_COL)
-            .parquet(self.path)
-        )
-
-    def upsert(self, spark: SparkSession, new: DataFrame) -> None:
-        """K4/J3 — keyed merge of an increment.
-
-        Reads back only the buckets the increment touches (partition
-        pruning on ``BUCKET_COL``), anti-joins survivors, and rewrites
-        those buckets alone via dynamic partition overwrite
-        (``spark.sql.sources.partitionOverwriteMode=dynamic`` — set in
-        session.py). Running the same increment twice yields an
-        identical table: the idempotency contract the reference
-        delegates to Redshift.
-        """
-        if not self._exists(spark):
-            self.overwrite(new)
-            return
-        new_b = self._bucketed(new)
-        touched = [r[BUCKET_COL] for r in new_b.select(BUCKET_COL).distinct().collect()]
-        old = spark.read.parquet(self.path).where(F.col(BUCKET_COL).isin(touched))
-        # eqNullSafe to match upsert_frames: a null-unsafe condition
-        # would never match null-key rows, so re-running the same
-        # increment would append them again — breaking idempotency.
-        on = [new_b[k].eqNullSafe(old[k]) for k in self.keys]
-        survivors = old.join(new_b, on=on, how="left_anti")
-        merged = new_b.unionByName(survivors)
-        # Spark (correctly) refuses to overwrite a path its own plan is
-        # reading; materialize the merged buckets first to cut lineage.
-        # The checkpoint holds only the touched buckets, not the table.
-        # (With Delta/Iceberg on the classpath this whole method becomes
-        # a single MERGE INTO and the checkpoint disappears.)
-        merged = merged.localCheckpoint(eager=True)
-        # Dynamic overwrite replaces only partitions present in `merged`
-        # = exactly the touched buckets. The mode is pinned as a
-        # WRITE-level option (overrides any session conf): on a foreign
-        # SparkSession without session.get_spark's dynamic default, a
-        # static overwrite would silently ERASE every untouched bucket.
-        (
-            merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(BUCKET_COL)
-            .parquet(self.path)
-        )
+    def _commit(self, *args, **kwargs) -> int:
+        version = super()._commit(*args, **kwargs)
+        self.vacuum(keep_last=1)
+        return version
 
 
 def merge_into_sql(target: str, source: str, keys: Sequence[str]) -> str:
@@ -200,9 +145,8 @@ def upsert_catalog_table(
     """K4/J3 on a catalog table: delegate the keyed merge to the
     engine's ``MERGE INTO`` (Delta/Iceberg row-level ops) instead of
     the read-anti-join-rewrite cycle MergeWriter runs on plain
-    Parquet. Same idempotency contract; the format's transaction log
-    supplies atomicity that dynamic partition overwrite only
-    approximates.
+    Parquet. Same idempotency contract, with the format's own
+    transaction log in place of MergeWriter's manifest commit.
 
     Raises the provider's AnalysisException unchanged if the table's
     format does not support row-level operations — probe with

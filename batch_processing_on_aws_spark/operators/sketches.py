@@ -562,9 +562,9 @@ class KmvLedger:
       suffices (no epoch bookkeeping), unlike additive partials
       where a re-run double-counts.
 
-    State rides :class:`~.merge.MergeWriter` (bucketed parquet, keyed
-    dynamic-partition overwrite): an update touches only the batch's
-    groups' buckets. Read back with :meth:`read`, which derives
+    State rides :class:`~.merge.MergeWriter` (a retention-1 keyed
+    VersionedTable): an update rewrites only the batch's groups'
+    buckets. Read back with :meth:`read`, which derives
     ``n_distinct_kept``/``est_distinct`` from the stored hashes with
     the exact :func:`kmv_distinct` expressions (exact below k).
     """
@@ -591,7 +591,7 @@ class KmvLedger:
         sk = kmv_distinct(batch, self.key_col, self.group_col, self.k).select(
             self.group_col, "kmv_hashes"
         )
-        if self.writer._exists(spark):
+        if self.writer.latest_version() > 0:
             state = self.writer.read(spark).select(
                 F.col(self.group_col),
                 F.col("kmv_hashes").alias("__old"),

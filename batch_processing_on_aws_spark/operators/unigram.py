@@ -52,7 +52,7 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .bpe import _word_histogram
+from .bpe import _histogram_for
 
 SEP = "\x1f"  # piece wrapper in path encodings (never occurs in text)
 
@@ -316,15 +316,13 @@ def train_unigram(
     probabilities renormalize over the surviving vocabulary (dropped
     pieces' usage mass falls back onto their sub-pieces). Default
     None keeps the full seed — the oracle-pinned registry
-    configuration."""
+    configuration.
+
+    ``word_histogram``: as in ``learn_bpe`` — the precomputed
+    ``_word_histogram(df, text_col)`` for the same ``text_col``;
+    checked for a string ``word`` and an integral ``n`` column."""
     spark = df.sparkSession
-    # shared-histogram passthrough (round-15): see learn_bpe — one
-    # corpus pass when several families train on the same corpus
-    hist = (
-        word_histogram
-        if word_histogram is not None
-        else _word_histogram(df, text_col).localCheckpoint()
-    )
+    hist = _histogram_for(df, text_col, word_histogram)
     if (
         local_histogram_max_words
         and hist.count() <= local_histogram_max_words

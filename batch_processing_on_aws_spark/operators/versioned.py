@@ -1,15 +1,17 @@
-"""Versioned keyed tables over plain Parquet — manifest-based time
-travel (extension surface; lakehouse ops).
+"""Versioned keyed tables over plain Parquet — the engine's one keyed
+bucketed-table core, with manifest-based time travel (lakehouse ops).
 
-The :class:`~.merge.MergeWriter` rewrites touched buckets IN PLACE:
-correct and idempotent, but the previous state is gone the moment the
-overwrite lands — no audit of what a bad increment replaced, no
-read-at-version for reproducing yesterday's training run, no
-rollback. Transactional formats (Delta/Iceberg — the
-``operators/merge.py`` MERGE INTO delegation) solve this with a
-commit log; :class:`VersionedTable` is the same idea reduced to its
-load-bearing core on plain Parquet, so the engine's dev/test lake
-gets time travel without a format dependency:
+Every keyed table in the engine is a :class:`VersionedTable`: rows are
+tagged with ``__bucket = pmod(hash(keys), n_buckets)``, a keyed write
+rewrites only the buckets its keys hash into, and every write is an
+atomic manifest commit. The warehouse writer
+:class:`~.merge.MergeWriter` is the same table vacuumed to its latest
+version after each write (retention 1); keep more versions and the
+table gains audit, read-at-version and rollback. Transactional formats
+(Delta/Iceberg — the ``operators/merge.py`` MERGE INTO delegation)
+solve this with a commit log; :class:`VersionedTable` is the same idea
+reduced to its load-bearing core on plain Parquet, so the engine's
+dev/test lake gets it without a format dependency:
 
 - data files are IMMUTABLE, written once under a per-commit directory
   (``files/<commit>/__bucket=N/…``); a commit never touches another
@@ -54,6 +56,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import uuid
 from collections.abc import Sequence
 
@@ -103,6 +106,9 @@ class _LocalFS:
 
     def remove(self, path: str) -> None:
         os.remove(path)
+
+    def remove_tree(self, path: str) -> None:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 class _HadoopFS:
@@ -176,6 +182,9 @@ class _HadoopFS:
 
     def remove(self, path: str) -> None:
         self._fs.delete(self._jpath(path), False)
+
+    def remove_tree(self, path: str) -> None:
+        self._fs.delete(self._jpath(path), True)
 
 
 def _changed_buckets(mf_a: dict, mf_b: dict) -> list[str]:
@@ -622,6 +631,92 @@ class VersionedTable:
             )
         return best
 
+    def _bucket_rows(
+        self, spark: SparkSession, pm: dict, buckets
+    ) -> DataFrame | None:
+        """Bucket-tagged rows of ``buckets`` as of manifest ``pm``, read
+        from exactly those buckets' files (None when they hold none).
+        File-list reads drop the hive-derived bucket column, so it is
+        recomputed — a pure function of the keys."""
+        files = [
+            os.path.join(self.path, f)
+            for b in sorted(buckets)
+            for f in pm["buckets"].get(str(b), [])
+        ]
+        if not files:
+            return None
+        return self._bucketed(
+            self._files_reader(spark, pm).parquet(*files).drop(BUCKET_COL)
+        )
+
+    def touched_rows(self, spark: SparkSession, df: DataFrame) -> DataFrame:
+        """The latest version's rows in every bucket ``df``'s keys hash
+        into (bucket column dropped) — the O(touched buckets) read a
+        keyed merge starts from, for callers that fold ``df`` into
+        existing rows before upserting the result
+        (``IncrementalAgg``). An empty frame of the table schema when
+        those buckets hold no files."""
+        pm = self._manifest(self.latest_version())
+        old = self._bucket_rows(spark, pm, self._buckets_of(self._bucketed(df)))
+        if old is None:
+            return self.read(spark).limit(0)
+        return old.drop(BUCKET_COL)
+
+    @staticmethod
+    def _buckets_of(df_b: DataFrame) -> set[int]:
+        return {
+            r[BUCKET_COL] for r in df_b.select(BUCKET_COL).distinct().collect()
+        }
+
+    def _merge_touched(
+        self,
+        spark: SparkSession,
+        parent: int,
+        touched: set[int],
+        match: DataFrame,
+        match_cols: Sequence[str],
+        new_b: DataFrame | None,
+        operation: str,
+        txn: dict | None,
+        committed_at: str | None,
+    ) -> int:
+        """The one keyed rewrite behind upsert / replace_keys /
+        delete_keys: read ONLY the ``touched`` buckets' files, drop the
+        stored rows whose ``match_cols`` tuple appears in ``match``
+        (null-safe, so null-key rows match and a re-run stays
+        idempotent), union the bucket-tagged ``new_b`` rows in, and
+        commit the rewritten buckets as a new version whose untouched
+        buckets stay file-shared with the parent."""
+        pm = self._manifest(parent)
+        merged = new_b
+        old = self._bucket_rows(spark, pm, touched)
+        if old is not None:
+            on = [match[c].eqNullSafe(old[c]) for c in match_cols]
+            survivors = old.join(match, on=on, how="left_anti")
+            # schema evolution (add-column): unionByName aligns by
+            # name and null-fills whichever side lacks a column, so an
+            # increment may carry NEW columns (old rows read as NULL)
+            # and old files keep their written schema untouched
+            merged = (
+                survivors if new_b is None
+                else new_b.unionByName(survivors, allowMissingColumns=True)
+            )
+        merged = merged.localCheckpoint(eager=True)
+        combined = {
+            int(b): list(fs)
+            for b, fs in pm["buckets"].items()
+            if int(b) not in touched
+        }
+        # a bucket whose rows were ALL dropped writes no files: it must
+        # still leave the manifest, so start from the shared set and
+        # add only what the rewrite produced
+        combined.update(self._write_commit(merged))
+        return self._commit(
+            combined, parent, txn=txn, operation=operation,
+            committed_at=committed_at, retry_touched=set(touched),
+            schema_json=self._fold_schema_json(pm, merged),
+        )
+
     def upsert(
         self,
         spark: SparkSession,
@@ -629,53 +724,18 @@ class VersionedTable:
         txn: dict | None = None,
         committed_at: str | None = None,
     ) -> int:
-        """Keyed merge as a NEW version: only the touched buckets'
-        files are written; untouched buckets are file-shared with the
-        parent manifest. Same null-safe win-by-key semantics as
-        MergeWriter.upsert."""
+        """Keyed merge as a NEW version: rows of ``new`` replace
+        same-key stored rows (null-safe keys), only the touched
+        buckets' files are written, and untouched buckets are
+        file-shared with the parent manifest. The first write to an
+        empty table is an :meth:`overwrite`."""
         parent = self.latest_version()
         if parent == 0:
             return self.overwrite(new, txn=txn, committed_at=committed_at)
         new_b = self._bucketed(new)
-        touched = [
-            r[BUCKET_COL] for r in new_b.select(BUCKET_COL).distinct().collect()
-        ]
-        pm = self._manifest(parent)
-        old_manifest = pm["buckets"]
-        old_touched_files = [
-            os.path.join(self.path, f)
-            for b in touched
-            for f in old_manifest.get(str(b), [])
-        ]
-        if old_touched_files:
-            old = self._files_reader(spark, pm).parquet(*old_touched_files)
-            # file-list reads drop the hive-derived bucket column;
-            # recompute it (pure function of the keys)
-            if BUCKET_COL in old.columns:
-                old = old.drop(BUCKET_COL)
-            old = self._bucketed(old)
-            on = [new_b[k].eqNullSafe(old[k]) for k in self.keys]
-            survivors = old.join(new_b, on=on, how="left_anti")
-            # schema evolution (add-column): unionByName aligns by
-            # name and null-fills whichever side lacks a column, so an
-            # increment may carry NEW columns (old rows read as NULL)
-            # and old files keep their written schema untouched
-            merged = new_b.unionByName(survivors, allowMissingColumns=True)
-        else:
-            merged = new_b
-        merged = merged.localCheckpoint(eager=True)
-        files = self._write_commit(merged)
-        combined = {
-            int(b): [f for f in fs]
-            for b, fs in old_manifest.items()
-            if int(b) not in touched
-        }
-        combined.update(files)
-        return self._commit(
-            combined, parent, txn=txn, operation="upsert",
-            committed_at=committed_at,
-            retry_touched={int(b) for b in touched},
-            schema_json=self._fold_schema_json(pm, merged),
+        return self._merge_touched(
+            spark, parent, self._buckets_of(new_b), new_b, self.keys, new_b,
+            "upsert", txn, committed_at,
         )
 
     def replace_keys(
@@ -711,45 +771,13 @@ class VersionedTable:
             )
         new_b = self._bucketed(new).localCheckpoint(eager=True)
         keyset = new_b.select(*mcols).distinct()
-        pm = self._manifest(parent)
-        old_manifest = pm["buckets"]
         cur = self._bucketed(self.read(spark, parent))
-        touched = {
-            r[BUCKET_COL]
-            for r in cur.join(keyset, mcols, "left_semi")
-            .select(BUCKET_COL).distinct().collect()
-        } | {
-            r[BUCKET_COL]
-            for r in new_b.select(BUCKET_COL).distinct().collect()
-        }
-        old_touched_files = [
-            os.path.join(self.path, f)
-            for b in sorted(touched)
-            for f in old_manifest.get(str(b), [])
-        ]
-        if old_touched_files:
-            old = self._files_reader(spark, pm).parquet(*old_touched_files)
-            if BUCKET_COL in old.columns:
-                old = old.drop(BUCKET_COL)
-            old = self._bucketed(old)
-            on = [keyset[c].eqNullSafe(old[c]) for c in mcols]
-            survivors = old.join(keyset, on=on, how="left_anti")
-            merged = new_b.unionByName(survivors, allowMissingColumns=True)
-        else:
-            merged = new_b
-        merged = merged.localCheckpoint(eager=True)
-        files = self._write_commit(merged)
-        combined = {
-            int(b): list(fs)
-            for b, fs in old_manifest.items()
-            if int(b) not in touched
-        }
-        combined.update(files)
-        return self._commit(
-            combined, parent, txn=txn, operation="replace_keys",
-            retry_touched={int(b) for b in touched},
-            committed_at=committed_at,
-            schema_json=self._fold_schema_json(pm, merged),
+        touched = self._buckets_of(
+            cur.join(keyset, mcols, "left_semi")
+        ) | self._buckets_of(new_b)
+        return self._merge_touched(
+            spark, parent, touched, keyset, mcols, new_b,
+            "replace_keys", txn, committed_at,
         )
 
     def read(
@@ -811,24 +839,14 @@ class VersionedTable:
         manifest = pm["buckets"]
         cond = condition.cast("boolean")
         cur = self._bucketed(self.read(spark, parent))
-        touched = [
-            r[BUCKET_COL]
-            for r in cur.where(cond).select(BUCKET_COL).distinct().collect()
-        ]
+        touched = self._buckets_of(cur.where(cond))
         if not touched:
             # audited no-op: a fresh manifest sharing every file
             return self._commit(
                 {int(b): list(fs) for b, fs in manifest.items()}, parent,
                 operation="delete", committed_at=committed_at,
             )
-        touched_files = [
-            os.path.join(self.path, f)
-            for b in touched
-            for f in manifest.get(str(b), [])
-        ]
-        survivors = self._bucketed(
-            self._files_reader(spark, pm).parquet(*touched_files)
-        ).where(
+        survivors = self._bucket_rows(spark, pm, touched).where(
             ~F.coalesce(cond, F.lit(False))
         )
         survivors = survivors.localCheckpoint(eager=True)
@@ -836,7 +854,7 @@ class VersionedTable:
         combined = {
             int(b): list(fs)
             for b, fs in manifest.items()
-            if int(b) not in set(touched)
+            if int(b) not in touched
         }
         # a bucket whose rows were ALL deleted writes no files: it
         # must still drop out of the manifest, so start from the
@@ -878,40 +896,15 @@ class VersionedTable:
         kb = self._bucketed(keys_df.select(*self.keys).distinct())
         kb = kb.localCheckpoint(eager=True)
         pm = self._manifest(parent)
-        manifest = pm["buckets"]
-        touched = {
-            r[BUCKET_COL] for r in kb.select(BUCKET_COL).distinct().collect()
-        }
-        touched = {b for b in touched if str(b) in manifest}
+        touched = {b for b in self._buckets_of(kb) if str(b) in pm["buckets"]}
         if not touched:
             return self._commit(
-                {int(b): list(fs) for b, fs in manifest.items()}, parent,
+                {int(b): list(fs) for b, fs in pm["buckets"].items()}, parent,
                 txn=txn, operation="delete_keys", committed_at=committed_at,
             )
-        touched_files = [
-            os.path.join(self.path, f)
-            for b in sorted(touched)
-            for f in manifest.get(str(b), [])
-        ]
-        old = self._files_reader(spark, pm).parquet(*touched_files)
-        if BUCKET_COL in old.columns:
-            old = old.drop(BUCKET_COL)
-        old = self._bucketed(old)
-        on = [kb[k].eqNullSafe(old[k]) for k in self.keys]
-        survivors = old.join(kb, on=on, how="left_anti")
-        survivors = survivors.localCheckpoint(eager=True)
-        files = self._write_commit(survivors)
-        combined = {
-            int(b): list(fs)
-            for b, fs in manifest.items()
-            if int(b) not in touched
-        }
-        combined.update(files)
-        return self._commit(
-            combined, parent, txn=txn, operation="delete_keys",
-            retry_touched={int(b) for b in touched},
-            committed_at=committed_at,
-            schema_json=self._schema_json(survivors),
+        return self._merge_touched(
+            spark, parent, touched, kb, self.keys, None,
+            "delete_keys", txn, committed_at,
         )
 
     def changes(
@@ -1030,12 +1023,7 @@ class VersionedTable:
         fat = {b: fs for b, fs in manifest.items() if len(fs) >= min_files}
         if not fat:
             return None
-        paths = [
-            os.path.join(self.path, f) for fs in fat.values() for f in fs
-        ]
-        rows = self._bucketed(
-            self._files_reader(spark, pm).parquet(*paths)
-        )
+        rows = self._bucket_rows(spark, pm, [int(b) for b in fat])
         # one output file per compacted bucket: partitionBy splits by
         # bucket again, so a single upstream partition per bucket is
         # enough; repartition on the bucket key achieves that without
@@ -1109,6 +1097,13 @@ class VersionedTable:
             if rel not in live:
                 fs.remove(full)
                 deleted.append(rel)
+        # a commit directory no kept manifest references is dropped
+        # whole, with its _SUCCESS / checksum leftovers, so a table
+        # vacuumed to keep_last=1 holds only its live commits' files
+        live_commits = {f.split("/")[1] for f in live}
+        for commit in fs.listdir(froot):
+            if commit not in live_commits:
+                fs.remove_tree(os.path.join(froot, commit))
         for v in versions:
             if v not in keep:
                 fs.remove(self._manifest_path(v))

@@ -48,7 +48,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .bpe import _apply_merge, _symbolize_wp, _word_histogram
+from .bpe import _apply_merge, _histogram_for, _symbolize_wp, _word_histogram
 from .textstats import tokens
 
 CONT = "##"
@@ -135,15 +135,13 @@ def learn_wordpiece(
     histogram fast path (vocab collected once, loop driver-local) or
     the distributed loop (two vocab-sized aggregates + a one-row
     argmax collect per round); set ``local_histogram_max_words=0`` to
-    force the distributed path."""
+    force the distributed path.
+
+    ``word_histogram``: as in ``learn_bpe`` — the precomputed
+    ``_word_histogram(df, text_col)`` for the same ``text_col``;
+    checked for a string ``word`` and an integral ``n`` column."""
     spark = df.sparkSession
-    # shared-histogram passthrough (round-15): see learn_bpe — one
-    # corpus pass when several families train on the same corpus
-    hist = (
-        word_histogram
-        if word_histogram is not None
-        else _word_histogram(df, text_col).localCheckpoint()
-    )
+    hist = _histogram_for(df, text_col, word_histogram)
     if (
         local_histogram_max_words
         and hist.count() <= local_histogram_max_words

@@ -16,10 +16,13 @@ Scale design vs the reference:
 - the reference re-scans ALL weekly files every week
   (``raw/cycling-journey/*/*`` glob, journey-data-transformation.py:28)
   — a scaling bug. Here each increment processes ONLY its own batch
-  and merges by key (partition-pruned bucket rewrite, operators/merge.py).
+  and merges by key, rewriting only the key buckets it touches.
 - warehouse-boundary UPSERT (Redshift in the reference,
   init_2_s3_to_redshifht_dag.py:63-74) is owned in-engine by
-  MergeWriter, so the processed zone itself is idempotent.
+  MergeWriter (operators/merge.py), so the processed zone itself is
+  idempotent; every dimension and fact write is one atomic manifest
+  commit of a retention-1 keyed table (operators/versioned.py), so a
+  crashed week leaves the previous warehouse state readable.
 """
 
 from __future__ import annotations

@@ -1051,8 +1051,8 @@ WHERE NOT COALESCE(event_id % 10 = 5, FALSE)
 
 def upsert_events_writer(spark, sf_dir):
     """§2.9 — the same MERGE contract as ``upsert_events`` but through
-    the WRITER path (bucket-partitioned parquet + dynamic partition
-    overwrite, ``operators/merge.py::MergeWriter``): seed the table,
+    the WRITER path (a retention-1 keyed table of manifest commits,
+    ``operators/merge.py::MergeWriter``): seed the table,
     apply the doubled-click increment TWICE, read the table back. The
     oracle is identical to ``upsert_events`` — passing proves the
     run-twice ⇒ identical-table idempotency the reference delegates to
@@ -1079,12 +1079,13 @@ def upsert_events_writer(spark, sf_dir):
     path = os.path.join(
         os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
         "spark-warehouse",
-        # the slice predicate is part of the path: a layout/definition
-        # change must not reuse a previous definition's converged table
-        f"upsert_events_writer_m3_{tag}",
+        # the slice predicate and the storage layout are part of the
+        # path: a layout/definition change must not reuse a previous
+        # definition's converged table
+        f"upsert_events_writer_m3_vt_{tag}",
     )
     writer = MergeWriter(path, keys=["event_id"], n_buckets=8)
-    if not writer._exists(spark):
+    if writer.latest_version() == 0:
         writer.overwrite(events)
     writer.upsert(spark, new)
     writer.upsert(spark, new)
@@ -9978,7 +9979,9 @@ def streamed_kmv_users(spark, sf_dir):
         f"{p}:{os.stat(p).st_size}:{os.stat(p).st_mtime_ns}" for p in files
     ]
     key = hashlib.md5("\n".join(sig).encode()).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_kstream_{key}")
+    # "vt": the state is a manifest-committed keyed table; a root left
+    # in an older layout by a previous build must not be read back
+    root = os.path.join(tempfile.gettempdir(), f"spark_graft_kstream_vt_{key}")
     inp, state, ckpt = (
         os.path.join(root, d) for d in ("in", "state", "ckpt")
     )
@@ -10127,7 +10130,9 @@ def streamed_event_quarantine(spark, sf_dir):
         f"{p}:{os.stat(p).st_size}:{os.stat(p).st_mtime_ns}" for p in files
     ]
     key = hashlib.md5("\n".join(sig).encode()).hexdigest()[:16]
-    root = os.path.join(tempfile.gettempdir(), f"spark_graft_qstream_{key}")
+    # "vt": the sinks are manifest-committed keyed tables; a root left
+    # in an older layout by a previous build must not be read back
+    root = os.path.join(tempfile.gettempdir(), f"spark_graft_qstream_vt_{key}")
     inp, clean_t, dlq_t, ckpt = (
         os.path.join(root, d) for d in ("in", "clean", "dlq", "ckpt")
     )

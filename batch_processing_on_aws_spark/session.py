@@ -26,7 +26,8 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# the host's core count; SPARK_GRAFT_CPUS overrides it
+DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 ROWLEVEL_CATALOG_CLASS = "sparkgraft.catalog.SimpleRowLevelCatalog"
 
@@ -80,9 +81,20 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # Dynamic partition overwrite: the merge writer (operators/merge.py)
-        # rewrites only affected partitions, never the whole table.
+        # Dynamic partition overwrite: the streaming ledgers
+        # (streaming/incremental.py) rewrite only their own epoch's
+        # partition on a replayed epoch, never the whole ledger. Keyed
+        # tables do not rely on it: they commit manifests
+        # (operators/versioned.py).
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
+        # Keyed-table reads pass explicit file lists, often more than
+        # the default 32 paths at which Spark lists files with a
+        # distributed job. The session is always local[N], where that
+        # job only adds scheduling latency, so list on the driver.
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            "1000000",
+        )
     )
     jar = _rowlevel_jar()
     if jar:

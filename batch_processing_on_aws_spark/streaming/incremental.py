@@ -3,10 +3,11 @@
 The reference's "streaming" is a weekly cron DAG with backfill and
 idempotent re-loads (proc_0_ingestion_to_s3_dag.py:42-53 —
 ``catchup=True``, ``depends_on_past``, UPSERT keys at the warehouse).
-Those are exactly Structured Streaming file-source semantics with
-``trigger(availableNow=True)``: each run drains whatever landed since
-the last checkpoint, exactly once, then stops — a cron-able superset
-of the reference's weekly behavior.
+Those are exactly Structured Streaming file-source semantics with an
+``availableNow`` trigger: each run drains whatever landed since the
+last checkpoint, exactly once, then stops — a cron-able superset of
+the reference's weekly behavior. Every drain here runs through one
+epoch driver, :func:`_run_epochs`.
 
 Exactly-once per key comes from pairing the checkpointed source with
 the keyed MergeWriter in ``foreachBatch``: re-delivered records
@@ -25,8 +26,64 @@ from collections.abc import Callable, Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
 from ..operators.merge import MergeWriter
+
+
+def _run_epochs(
+    spark: SparkSession,
+    input_dir: str,
+    schema: T.StructType,
+    checkpoint_dir: str,
+    apply: Callable[[DataFrame, int], None] | None = None,
+    *,
+    fmt: str = "parquet",
+    max_files_per_trigger: int | None = None,
+    transform: Callable[[DataFrame], DataFrame] | None = None,
+    txn_table=None,
+    app_id: str | None = None,
+    sink: Callable[[DataStreamWriter], DataStreamWriter] | None = None,
+) -> None:
+    """The one stream-epoch driver behind every drain in this module:
+    read ``input_dir`` as a checkpointed file stream (optionally
+    ``transform``-ed), run ``apply(batch, epoch_id)`` on every
+    non-empty micro-batch, and stop once everything that had landed is
+    drained (availableNow).
+
+    ``txn_table`` (a VersionedTable) adds the crash-replay guard for
+    drains that land each epoch as ONE stamped commit: an epoch whose
+    writer transaction (``app_id``, epoch) already committed there is
+    skipped. Drains that commit several times per epoch keep their own
+    per-commit guards inside ``apply``.
+
+    ``sink`` replaces the foreachBatch body with a plain streaming sink
+    (given the stream's writer, returns it configured); the sink's own
+    commit log is then the exactly-once record."""
+    reader = spark.readStream.format(fmt).schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    stream = reader.load(input_dir)
+    if transform is not None:
+        stream = transform(stream)
+    if sink is not None:
+        writer = sink(stream.writeStream)
+    else:
+
+        def _epoch(batch: DataFrame, epoch_id: int) -> None:
+            if batch.isEmpty():
+                return
+            if txn_table is not None and txn_table.txn_applied(app_id, epoch_id):
+                return  # crash-replayed epoch: already committed
+            apply(batch, epoch_id)
+
+        writer = stream.writeStream.foreachBatch(_epoch)
+    q = (
+        writer.option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
 
 
 def incremental_merge_stream(
@@ -44,26 +101,13 @@ def incremental_merge_stream(
     then stop (availableNow). Run it from cron for the reference's
     weekly cadence, or in a loop for lower latency.
     """
-    reader = spark.readStream.format(fmt).schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(input_dir)
-    if transform is not None:
-        stream = transform(stream)
     writer = MergeWriter(table_path, keys=keys)
-
-    def _merge(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        writer.upsert(batch.sparkSession, batch)
-
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_epochs(
+        spark, input_dir, schema, checkpoint_dir,
+        lambda batch, _: writer.upsert(batch.sparkSession, batch),
+        fmt=fmt, max_files_per_trigger=max_files_per_trigger,
+        transform=transform,
     )
-    q.awaitTermination()
 
 
 def ingest_versioned_stream(
@@ -105,15 +149,8 @@ def ingest_versioned_stream(
     from ..operators.versioned import VersionedTable
 
     vt = VersionedTable(table_path, keys=keys, n_buckets=n_buckets)
-    stream = spark.readStream.format(fmt).schema(schema).load(input_dir)
-    if transform is not None:
-        stream = transform(stream)
 
     def _merge(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        if vt.txn_applied(app_id, epoch_id):
-            return  # crash-replayed epoch: already committed
         vt.upsert(
             batch.sparkSession, batch,
             txn={"app": app_id, "epoch": epoch_id},
@@ -122,13 +159,10 @@ def ingest_versioned_stream(
             ),
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_epochs(
+        spark, input_dir, schema, checkpoint_dir, _merge, fmt=fmt,
+        transform=transform, txn_table=vt, app_id=app_id,
     )
-    q.awaitTermination()
 
 
 def ingest_ivf_index_stream(
@@ -185,26 +219,16 @@ def ingest_ivf_index_stream(
     )
 
     def _merge(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        if idx.table.txn_applied(app_id, epoch_id):
-            return  # crash-replayed epoch: already committed
         txn = {"app": app_id, "epoch": epoch_id}
         if idx.table.latest_version() == 0:
             idx.build(batch, txn=txn)
         else:
             idx.add(batch, txn=txn)
 
-    q = (
-        spark.readStream.format(fmt)
-        .schema(schema)
-        .load(input_dir)
-        .writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_epochs(
+        spark, input_dir, schema, checkpoint_dir, _merge, fmt=fmt,
+        txn_table=idx.table, app_id=app_id,
     )
-    q.awaitTermination()
 
 
 def ingest_text_index_stream(
@@ -248,21 +272,13 @@ def ingest_text_index_stream(
         n_buckets=n_buckets,
     )
 
-    def _merge(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        idx.apply(batch, txn={"app": app_id, "epoch": epoch_id})
-
-    q = (
-        spark.readStream.format(fmt)
-        .schema(schema)
-        .load(input_dir)
-        .writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_epochs(
+        spark, input_dir, schema, checkpoint_dir,
+        lambda batch, epoch_id: idx.apply(
+            batch, txn={"app": app_id, "epoch": epoch_id}
+        ),
+        fmt=fmt,
     )
-    q.awaitTermination()
 
 
 def ingest_cluster_stream(
@@ -297,24 +313,14 @@ def ingest_cluster_stream(
 
     idx = ClusterIndex(index_root, n_buckets=n_buckets)
 
-    def _merge(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        idx.apply(
+    _run_epochs(
+        spark, input_dir, schema, checkpoint_dir,
+        lambda batch, epoch_id: idx.apply(
             batch, id_a=id_a, id_b=id_b,
             txn={"app": app_id, "epoch": epoch_id},
-        )
-
-    q = (
-        spark.readStream.format(fmt)
-        .schema(schema)
-        .load(input_dir)
-        .writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+        ),
+        fmt=fmt,
     )
-    q.awaitTermination()
 
 
 def ingest_semantic_dedup_stream(
@@ -371,23 +377,13 @@ def ingest_semantic_dedup_stream(
         n_buckets=n_buckets,
     )
 
-    def _merge(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        if idx.table.txn_applied(app_id, epoch_id):
-            return  # crash-replayed epoch: already committed
-        idx.apply(batch, txn={"app": app_id, "epoch": epoch_id})
-
-    q = (
-        spark.readStream.format(fmt)
-        .schema(schema)
-        .load(input_dir)
-        .writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_epochs(
+        spark, input_dir, schema, checkpoint_dir,
+        lambda batch, epoch_id: idx.apply(
+            batch, txn={"app": app_id, "epoch": epoch_id}
+        ),
+        fmt=fmt, txn_table=idx.table, app_id=app_id,
     )
-    q.awaitTermination()
 
 
 def replicate_changes_stream(
@@ -442,8 +438,6 @@ def replicate_changes_stream(
     ]
 
     def _apply(batch: DataFrame, epoch: int) -> None:
-        if batch.isEmpty():
-            return
         from pyspark.sql import Window
 
         s = batch.sparkSession
@@ -476,17 +470,10 @@ def replicate_changes_stream(
                     committed_at=ca,
                 )
 
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .format(fmt)
-        .load(input_dir)
-        .writeStream.foreachBatch(_apply)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_epochs(
+        spark, input_dir, schema, checkpoint_dir, _apply, fmt=fmt,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    q.awaitTermination()
 
 
 def dedup_stream(
@@ -657,16 +644,7 @@ def ingest_dedup_stream(
         if compact_every and epoch > 0 and epoch % compact_every == 0:
             compact_ledger(s, ledger_path)
 
-    q = (
-        spark.readStream.schema(schema)
-        .format(fmt)
-        .load(input_dir)
-        .writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_epochs(spark, input_dir, schema, checkpoint_dir, _merge, fmt=fmt)
 
 
 def ingest_media_dedup_stream(
@@ -757,16 +735,7 @@ def ingest_media_dedup_stream(
         if compact_every and epoch > 0 and epoch % compact_every == 0:
             compact_ledger(s, ledger_path)
 
-    q = (
-        spark.readStream.schema(schema)
-        .format(fmt)
-        .load(input_dir)
-        .writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_epochs(spark, input_dir, schema, checkpoint_dir, _merge, fmt=fmt)
 
 
 def ingest_neardup_stream(
@@ -830,16 +799,7 @@ def ingest_neardup_stream(
         if compact_every and epoch > 0 and epoch % compact_every == 0:
             compact_ledger(s, ledger_path)
 
-    q = (
-        spark.readStream.schema(schema)
-        .format(fmt)
-        .load(input_dir)
-        .writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_epochs(spark, input_dir, schema, checkpoint_dir, _merge, fmt=fmt)
 
 
 def enrich_stream(
@@ -937,16 +897,7 @@ def ingest_span_dedup_stream(
         if compact_every and epoch > 0 and epoch % compact_every == 0:
             compact_ledger(s, ledger_path)
 
-    q = (
-        spark.readStream.schema(schema)
-        .format(fmt)
-        .load(input_dir)
-        .writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_epochs(spark, input_dir, schema, checkpoint_dir, _merge, fmt=fmt)
 
 
 # reserved partition for folded history: real streaming epochs are
@@ -1046,7 +997,6 @@ def compact_ledger(spark: SparkSession, ledger_path: str) -> dict:
     n_before = src.count()
     # Spark (correctly) refuses to overwrite a path its own plan is
     # reading; materialize the compacted set first to cut lineage
-    # (same pattern as MergeWriter.upsert)
     compacted = compacted.localCheckpoint(eager=True)
     # write first (dynamic overwrite of ONLY the -1 partition) ...
     _write_epoch_partitions(((compacted, ledger_path),), COMPACTED_EPOCH)
@@ -1188,13 +1138,8 @@ def ingest_scd2_stream(
     vt = VersionedTable(
         table_path, keys=[*keys, "valid_from"], n_buckets=n_buckets
     )
-    stream = spark.readStream.format(fmt).schema(schema).load(input_dir)
 
     def _merge(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        if vt.txn_applied(app_id, epoch_id):
-            return  # crash-replayed epoch: already committed
         s = batch.sparkSession
         if vt.latest_version() == 0:
             recomputed = scd2_collapse(
@@ -1218,13 +1163,10 @@ def ingest_scd2_stream(
             ),
         )
 
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_epochs(
+        spark, input_dir, schema, checkpoint_dir, _merge, fmt=fmt,
+        txn_table=vt, app_id=app_id,
     )
-    q.awaitTermination()
 
 
 def stream_pit_enrich(
@@ -1259,27 +1201,23 @@ def stream_pit_enrich(
     """
     from ..operators.rangejoin import interval_join
 
-    stream = spark.readStream.format(fmt).schema(schema).load(input_dir)
-    enriched = interval_join(
-        stream,
-        intervals,
-        on=on,
-        point_ts=point_ts,
-        start_col=start_col,
-        end_col=end_col,
-        bin_width_seconds=bin_width_seconds,
-        open_end_ts=open_end_ts,
-        how="inner",
-    )
-    q = (
-        enriched.writeStream.format("parquet")
+    _run_epochs(
+        spark, input_dir, schema, checkpoint_dir, fmt=fmt,
+        transform=lambda stream: interval_join(
+            stream,
+            intervals,
+            on=on,
+            point_ts=point_ts,
+            start_col=start_col,
+            end_col=end_col,
+            bin_width_seconds=bin_width_seconds,
+            open_end_ts=open_end_ts,
+            how="inner",
+        ),
+        sink=lambda w: w.format("parquet")
         .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
+        .outputMode("append"),
     )
-    q.awaitTermination()
 
 
 def ingest_kmv_stream(
@@ -1312,25 +1250,12 @@ def ingest_kmv_stream(
     from ..operators.sketches import KmvLedger
 
     ledger = KmvLedger(state_path, group_col, key_col, k=k)
-    reader = spark.readStream.format(fmt).schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(input_dir)
-    if transform is not None:
-        stream = transform(stream)
-
-    def _fold(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        ledger.update(batch.sparkSession, batch)
-
-    q = (
-        stream.writeStream.foreachBatch(_fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_epochs(
+        spark, input_dir, schema, checkpoint_dir,
+        lambda batch, _: ledger.update(batch.sparkSession, batch),
+        fmt=fmt, max_files_per_trigger=max_files_per_trigger,
+        transform=transform,
     )
-    q.awaitTermination()
 
 
 def ingest_quarantine_stream(
@@ -1362,28 +1287,18 @@ def ingest_quarantine_stream(
     route identically.
     """
     from ..operators.constraints import quarantine_split
-    from ..operators.merge import MergeWriter
 
     cw = MergeWriter(clean_table, keys=keys)
     qw = MergeWriter(dlq_table, keys=keys)
-    reader = spark.readStream.format(fmt).schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(input_dir)
 
     def _route(batch: DataFrame, epoch_id: int) -> None:
-        if batch.isEmpty():
-            return
         clean, bad = quarantine_split(batch, rules)
         if not clean.isEmpty():
             cw.upsert(batch.sparkSession, clean)
         if not bad.isEmpty():
             qw.upsert(batch.sparkSession, bad)
 
-    q = (
-        stream.writeStream.foreachBatch(_route)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    _run_epochs(
+        spark, input_dir, schema, checkpoint_dir, _route, fmt=fmt,
+        max_files_per_trigger=max_files_per_trigger,
     )
-    q.awaitTermination()

@@ -1,5 +1,6 @@
 """Benchmark harness: run the golden queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print
+(default /root/testdata/sf0.1) on local[N] — N is the host's core
+count, or $SPARK_GRAFT_CPUS when set — and print
 ONE compact JSON line:
 
     {"metric": "...", "value": N, "unit": "sec", "sf": ..., "n_queries": N}
@@ -23,7 +24,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from batch_processing_on_aws_spark.session import get_spark  # noqa: E402
+from batch_processing_on_aws_spark.session import (  # noqa: E402
+    DEFAULT_CPUS,
+    get_spark,
+)
 
 import __spark_entry__ as entrymod  # noqa: E402
 
@@ -178,16 +182,35 @@ def clear_scratch() -> int:
     its FIRST timed run; the per-query number stays min-of-2 (= the
     standing-output read, the declared timed quantity), and the
     sidecar's ``run_secs`` records the cold first run so the build
-    cost is attributable."""
+    cost is attributable.
+
+    Per-process roots (``spark_graft_*_<pid>``) of a process that is
+    still alive are left alone: they are another run's live state.
+    Returns the number of roots actually removed."""
     import glob
     import shutil
     import tempfile
 
     n = 0
     for root in glob.glob(os.path.join(tempfile.gettempdir(), "spark_graft_*")):
+        pid = root.rsplit("_", 1)[-1]
+        if pid.isdigit() and _pid_alive(int(pid)):
+            continue
         shutil.rmtree(root, ignore_errors=True)
-        n += 1
+        n += not os.path.exists(root)
     return n
+
+
+def _pid_alive(pid: int) -> bool:
+    if not 0 < pid < 2**22:  # above Linux's pid_max: a content key
+        return False
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        return True  # alive, owned by another user
+    return True
 
 
 def main() -> None:
@@ -289,7 +312,7 @@ def main() -> None:
     # at any other core count manufactures false regressions. Skip it
     # there (round-15, additions-only: timings and sidecar are
     # unchanged; only the regression comparison is suppressed).
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32") or 32)
+    cpus = DEFAULT_CPUS
     budget_gate_skipped = cpus != 32
     if os.path.exists(budgets_path) and sf_num == 0.1 and not budget_gate_skipped:
         with open(budgets_path) as f:
@@ -365,6 +388,8 @@ def main() -> None:
                 ),
                 "engine_drift_alarm": engine_drift_alarm,
                 "cpus": cpus,
+                "host_cpus": os.cpu_count(),
+                "cpus_override": os.environ.get("SPARK_GRAFT_CPUS") or None,
                 "budget_gate_skipped_nonstandard_cpus": budget_gate_skipped,
                 # cold-start accounting (round-15): scratch roots are
                 # cleared before the suite, so each query's first run

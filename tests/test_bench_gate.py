@@ -102,3 +102,40 @@ def test_probe_ratios_take_min_of_bracketing_runs():
     # demonstrated best; see test_one_sided_probe_transient)
     f, _, _ = compute_host_factor([1.1, 1.3], _suite(1.2))
     assert abs(f - 1.1) < 1e-12
+
+
+def test_default_cpus_follow_the_host(monkeypatch):
+    """With SPARK_GRAFT_CPUS unset the session (and so the bench) runs
+    local[<host cores>]; the variable still overrides it."""
+    import importlib
+
+    from batch_processing_on_aws_spark import session
+
+    try:
+        monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+        assert importlib.reload(session).DEFAULT_CPUS == os.cpu_count()
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+        assert importlib.reload(session).DEFAULT_CPUS == 3
+    finally:
+        monkeypatch.undo()
+        importlib.reload(session)
+
+
+def test_clear_scratch_spares_live_processes(tmp_path, monkeypatch):
+    """clear_scratch removes dead processes' per-PID roots and
+    content-keyed roots, leaves a live process's per-PID root alone,
+    and counts only what it removed."""
+    import subprocess
+    import tempfile
+
+    dead = subprocess.Popen([sys.executable, "-c", "pass"])
+    dead.wait()
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    live_root = tmp_path / f"spark_graft_vtab_sf0_01_{os.getpid()}"
+    dead_root = tmp_path / f"spark_graft_vtab_sf0_01_{dead.pid}"
+    keyed_root = tmp_path / "spark_graft_qstream_vt_0123456789abcdef"
+    for root in (live_root, dead_root, keyed_root):
+        (root / "t").mkdir(parents=True)
+    assert bench.clear_scratch() == 2
+    assert live_root.exists()
+    assert not dead_root.exists() and not keyed_root.exists()

@@ -126,6 +126,34 @@ def test_shared_word_histogram_passthrough(spark):
     ]
 
 
+@pytest.mark.parametrize("trainer", ["bpe", "unigram", "wordpiece"])
+@pytest.mark.parametrize(
+    "hist_schema,missing",
+    [
+        ("w string, n long", "'word'"),
+        ("word long, n long", "'word'"),
+        ("word string, cnt long", "'n'"),
+        ("word string, n double", "'n'"),
+    ],
+)
+def test_word_histogram_schema_is_checked(spark, trainer, hist_schema, missing):
+    """A word_histogram= frame without a string `word` or an integral
+    `n` column is rejected at the boundary, naming the column."""
+    from batch_processing_on_aws_spark.operators.bpe import learn_bpe
+    from batch_processing_on_aws_spark.operators.unigram import train_unigram
+    from batch_processing_on_aws_spark.operators.wordpiece import (
+        learn_wordpiece,
+    )
+
+    train = {
+        "bpe": learn_bpe, "unigram": train_unigram, "wordpiece": learn_wordpiece,
+    }[trainer]
+    df = spark.createDataFrame(CORPUS, "doc_id long, text string")
+    bad = spark.createDataFrame([], hist_schema)
+    with pytest.raises(ValueError, match=missing):
+        train(df, word_histogram=bad)
+
+
 def test_learn_bpe_deterministic_under_repartition(spark):
     from batch_processing_on_aws_spark.operators.bpe import learn_bpe
 

@@ -24,17 +24,23 @@ def test_no_citation_violations():
 
 
 def test_lint_detects_missing_file_and_bad_range(tmp_path, monkeypatch):
-    canary = os.path.join(
-        cc.REPO, "batch_processing_on_aws_spark", "_lint_canary_test.py"
+    # a synthetic reference tree and package, so the canary runs the
+    # real lint whether or not the reference checkout is on this host
+    ref = tmp_path / "reference"
+    (ref / "airflow" / "dags").mkdir(parents=True)
+    (ref / "airflow" / "dags" / "init_1_spark_emr_dag.py").write_text(
+        "".join(f"line {i}\n" for i in range(1, 41))
     )
-    with open(canary, "w") as f:
-        f.write(
-            '"""airflow/dags/no_such_dag.py:1 and '
-            'airflow/dags/init_1_spark_emr_dag.py:9999"""\n'
-        )
-    try:
-        v = cc.check()
-    finally:
-        os.remove(canary)
+    pkg = tmp_path / "repo" / "batch_processing_on_aws_spark"
+    pkg.mkdir(parents=True)
+    (pkg / "_lint_canary_test.py").write_text(
+        '"""airflow/dags/no_such_dag.py:1 and '
+        'airflow/dags/init_1_spark_emr_dag.py:9999 but '
+        'airflow/dags/init_1_spark_emr_dag.py:30-40 is fine"""\n'
+    )
+    monkeypatch.setattr(cc, "REFERENCE_ROOT", str(ref))
+    monkeypatch.setattr(cc, "REPO", str(tmp_path / "repo"))
+    v = cc.check()
     assert any("missing reference" in x for x in v)
     assert any("9999" in x for x in v)
+    assert len(v) == 2, v  # the in-range citation is not flagged

@@ -100,17 +100,20 @@ def test_untouched_buckets_not_rewritten(spark, tmp_path):
     # one batch touching exactly one group
     agg.apply_batch(spark, _rows(spark, [("g7", 1000, 1)]))
     after = bucket_files(path)
-    changed_dirs = {
-        os.path.dirname(p)
+    # a bucket's files live under files/<commit>/__bucket=N/, one
+    # commit directory per write: group changes by the bucket name
+    changed_buckets = {
+        os.path.basename(os.path.dirname(p))
         for p in set(before) ^ set(after)
         | {p for p in before.keys() & after.keys() if before[p] != after[p]}
     }
-    assert len(changed_dirs) == 1, (
-        f"expected exactly one rewritten bucket, got {sorted(changed_dirs)}"
+    assert len(changed_buckets) == 1, (
+        f"expected exactly one rewritten bucket, got {sorted(changed_buckets)}"
     )
     # untouched buckets: every surviving file byte-identical
     untouched = {
-        p for p in before if os.path.dirname(p) not in changed_dirs
+        p for p in before
+        if os.path.basename(os.path.dirname(p)) not in changed_buckets
     }
     assert untouched, "fixture degenerate: all buckets touched"
     for p in untouched:
@@ -389,12 +392,12 @@ def test_recompute_touched_leaves_untouched_buckets_byte_identical(
         ),
     )
     after = bucket_files(path)
-    changed_dirs = {
-        os.path.dirname(p)
+    changed_buckets = {
+        os.path.basename(os.path.dirname(p))
         for p in set(before) ^ set(after)
         | {p for p in before.keys() & after.keys() if before[p] != after[p]}
     }
-    assert len(changed_dirs) == 1, sorted(changed_dirs)
+    assert len(changed_buckets) == 1, sorted(changed_buckets)
     got = {
         r["grp"]: (r["n"], r["total"], r["lo"], r["hi"])
         for r in agg.read(spark).collect()

@@ -3,7 +3,6 @@ import os
 from pyspark.sql import functions as F
 
 from batch_processing_on_aws_spark.operators.merge import (
-    BUCKET_COL,
     MergeWriter,
     upsert_frames,
 )
@@ -44,30 +43,56 @@ def test_merge_writer_idempotent(spark, tmp_path):
 
 
 def test_merge_writer_rewrites_only_touched_buckets(spark, tmp_path):
+    """An upsert commits a manifest whose untouched buckets list
+    exactly the parent's files (shared, not rewritten) and whose
+    touched bucket lists new ones."""
     path = os.path.join(str(tmp_path), "t")
     w = MergeWriter(path, keys=["k"], n_buckets=8)
     base = spark.createDataFrame([(i, "v0") for i in range(100)], ["k", "v"])
     w.overwrite(base)
-    before = {
-        d: os.path.getmtime(os.path.join(path, d))
-        for d in os.listdir(path)
-        if d.startswith(BUCKET_COL)
-    }
+    before = w._manifest(w.latest_version())["buckets"]
     inc = spark.createDataFrame([(7, "v1")], ["k", "v"])
-    touched = inc.withColumn(
-        BUCKET_COL, F.pmod(F.hash("k"), F.lit(8))
-    ).collect()[0][BUCKET_COL]
+    (touched,) = w._buckets_of(w._bucketed(inc))
     w.upsert(spark, inc)
-    after = {
-        d: os.path.getmtime(os.path.join(path, d))
-        for d in os.listdir(path)
-        if d.startswith(BUCKET_COL)
-    }
-    untouched = [d for d in before if d != f"{BUCKET_COL}={touched}"]
+    after = w._manifest(w.latest_version())["buckets"]
+    untouched = [b for b in before if b != str(touched)]
     assert untouched, "expected >1 bucket"
-    for d in untouched:
-        assert before[d] == after[d], f"bucket {d} was rewritten needlessly"
-    assert before[f"{BUCKET_COL}={touched}"] != after[f"{BUCKET_COL}={touched}"]
+    for b in untouched:
+        assert after[b] == before[b], f"bucket {b} was rewritten needlessly"
+    assert after[str(touched)] != before[str(touched)]
+    assert set(after) == set(before)
+
+
+def test_merge_writer_keeps_one_version(spark, tmp_path):
+    """Retention 1: after several upserts the table holds exactly one
+    manifest, and its data files are exactly those that manifest
+    references — the footprint of an in-place rewrite."""
+    path = os.path.join(str(tmp_path), "t")
+    w = MergeWriter(path, keys=["k"], n_buckets=4)
+    w.overwrite(spark.createDataFrame([(i, "v0") for i in range(20)], ["k", "v"]))
+    for n in range(1, 4):
+        w.upsert(spark, spark.createDataFrame([(n, f"v{n}"), (n + 20, "x")], ["k", "v"]))
+    assert w.versions() == [4]
+    assert sorted(os.listdir(os.path.join(path, "_versions"))) == ["v00000004.json"]
+    referenced = {
+        f for fs in w._manifest(4)["buckets"].values() for f in fs
+    }
+    on_disk = {
+        os.path.relpath(os.path.join(dp, f), path)
+        for dp, _, fs in os.walk(os.path.join(path, "files"))
+        for f in fs
+        if f.endswith(".parquet")
+    }
+    assert on_disk == referenced
+    # commit directories no manifest references are gone entirely
+    assert set(os.listdir(os.path.join(path, "files"))) == {
+        f.split("/")[1] for f in referenced
+    }
+    assert _rows(w.read(spark)) == sorted(
+        [(i, "v0") for i in range(20) if i not in (1, 2, 3)]
+        + [(n, f"v{n}") for n in (1, 2, 3)]
+        + [(n + 20, "x") for n in (1, 2, 3)]
+    )
 
 
 def test_merge_writer_first_write_via_upsert(spark, tmp_path):
@@ -228,11 +253,10 @@ def test_merge_into_reaches_capability_gate_without_provider(spark):
 
 
 def test_upsert_survives_static_overwrite_session(spark, tmp_path):
-    """Foreign-session hazard (round 6): MergeWriter.upsert's dynamic
-    partition overwrite is pinned as a WRITE-level option, so on a
-    session whose partitionOverwriteMode is the Spark default (static)
-    the untouched buckets still survive — previously they would have
-    been silently erased."""
+    """Foreign-session hazard (round 6): on a session whose
+    partitionOverwriteMode is the Spark default (static) the untouched
+    buckets still survive — MergeWriter commits a manifest that shares
+    their files, so no partition overwrite mode is involved."""
     from batch_processing_on_aws_spark.operators.merge import MergeWriter
 
     conf = "spark.sql.sources.partitionOverwriteMode"

@@ -79,7 +79,7 @@ def test_plan_contract_allowlists_reference_live_queries():
             assert why and len(why) > 20, name
 
 
-def test_funnel_window_detector_catches_the_r6_shape(spark):
+def test_funnel_window_detector_catches_the_r6_shape(spark, scaled_x3):
     """The dynamic gate's reason to exist: a fixed-key-set window fed
     by data-scaled input (the r6 ivf_topk defect — per-query ANN rank
     over ~the whole corpus) must flag, while a keyed window whose
@@ -98,7 +98,7 @@ def test_funnel_window_detector_catches_the_r6_shape(spark):
         prof = {}
         for tag, d in (
             ("base", "/root/testdata/sf0.1"),
-            ("scaled", "/root/repo/scaledata/x3"),
+            ("scaled", scaled_x3),
         ):
             df = build(d)
             out = len(df.collect())

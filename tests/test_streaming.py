@@ -3,6 +3,7 @@ import os
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from batch_processing_on_aws_spark.operators.merge import MergeWriter
 from batch_processing_on_aws_spark.streaming import (
     dedup_stream,
     incremental_merge_stream,
@@ -26,19 +27,21 @@ def test_incremental_stream_exactly_once_per_key(spark, tmp_path):
     table = str(tmp_path / "table")
     ckpt = str(tmp_path / "ckpt")
 
+    writer = MergeWriter(table, ["k"])
     _write_batch(spark, inp, [(1, "a"), (2, "b")], "b1")
     incremental_merge_stream(spark, inp, SCHEMA, table, ["k"], ckpt)
-    got = {r["k"]: r["v"] for r in spark.read.parquet(table).collect()}
+    got = {r["k"]: r["v"] for r in writer.read(spark).collect()}
     assert got == {1: "a", 2: "b"}
 
     # second run with no new files: checkpoint prevents reprocessing
     incremental_merge_stream(spark, inp, SCHEMA, table, ["k"], ckpt)
-    assert spark.read.parquet(table).count() == 2
+    assert writer.read(spark).count() == 2
+    assert writer.versions() == [1]  # no new commit either
 
     # a late re-delivery of key 2 plus a new key → merge, not append
     _write_batch(spark, inp, [(2, "B"), (3, "c")], "b2")
     incremental_merge_stream(spark, inp, SCHEMA, table, ["k"], ckpt)
-    got = {r["k"]: r["v"] for r in spark.read.parquet(table).drop("__pk_bucket").collect()}
+    got = {r["k"]: r["v"] for r in writer.read(spark).collect()}
     assert got == {1: "a", 2: "B", 3: "c"}
 
 
@@ -50,7 +53,7 @@ def test_incremental_stream_with_transform(spark, tmp_path):
         spark, inp, SCHEMA, table, ["k"], str(tmp_path / "ck"),
         transform=lambda df: df.withColumn("v", F.upper("v")),
     )
-    assert spark.read.parquet(table).collect()[0]["v"] == "X"
+    assert MergeWriter(table, ["k"]).read(spark).collect()[0]["v"] == "X"
 
 
 def test_dedup_stream_drops_redeliveries(spark, tmp_path):

@@ -10,7 +10,7 @@ Three checks per query (logic in ``plans/contracts.py``):
    whose measured INPUT rows grow with the data while the query's
    OUTPUT does not. Each query is materialized at the canonical 1×
    bench fixture (sf0.1) and at the content-disjoint 3× fixture
-   (``scaledata/x3``, built by ``tools/gen_scale.py``); a window is
+   (``scaledata/x3``, built by ``tools/gen_scale.py`` when missing); a window is
    flagged when input growth ≥ 2.0×, input at 3× ≥ 5000 rows, and
    input growth ≥ 2× the query's output growth — i.e. the window
    concentrates a growing input while the result stays bounded, which
@@ -39,6 +39,7 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from batch_processing_on_aws_spark.plans import contracts, golden  # noqa: E402
 from batch_processing_on_aws_spark.session import get_spark  # noqa: E402
@@ -69,6 +70,9 @@ def main() -> None:
             json_path = a.split("=", 1)[1]
     only = set(args)
 
+    from gen_scale import ensure
+
+    ensure(SF_SCALED, 3, SF_BASE)
     spark = get_spark()
     qdefs = [q for q in golden.QUERIES if not only or q.name in only]
 

@@ -3,6 +3,9 @@ scale factor (default sf0.1), for scaling-curve measurements.
 
 Usage: python tools/gen_scale.py OUT_DIR K [SRC_DIR]
 
+``ensure(OUT_DIR, K, SRC_DIR)`` builds the fixture only when it is
+missing (the plan-contract test and tools/check_plans.py call it).
+
 Each of the K copies is a CONTENT-DISJOINT re-keyed clone, so data
 semantics scale the way a real bigger corpus does — more duplicate
 groups / clusters / customers, not bigger ones (naive replication
@@ -121,6 +124,17 @@ def generate(out_dir: str, k_copies: int, src_dir: str) -> None:
             f"SELECT count(*) FROM read_parquet('{out_dir}/{table}.parquet')"
         ).fetchone()[0]
         print(f"{table}: {n} rows ({k_copies} copies)")
+
+
+def ensure(out_dir: str, k_copies: int, src_dir: str) -> str:
+    """Build ``out_dir`` unless it already exists. The copy is
+    generated next to it and renamed into place, so an interrupted
+    build never leaves a partial fixture behind."""
+    if not os.path.isdir(out_dir):
+        tmp = f"{out_dir}.tmp-{os.getpid()}"
+        generate(tmp, k_copies, src_dir)
+        os.replace(tmp, out_dir)
+    return out_dir
 
 
 if __name__ == "__main__":
