@@ -23,8 +23,14 @@ increment rewrites ONLY the buckets its keys touch
 write lands as an atomic manifest commit, so a crash mid-write leaves
 the previous table intact instead of half-rewritten. After each commit
 the writer vacuums to the latest version, so the disk holds one
-version, as an in-place rewrite would. At 100 TB a weekly increment
-costs O(increment × touched-buckets), not O(table).
+version, as an in-place rewrite would. An increment rewrites every
+bucket its keys hash into, and with hash buckets that is about
+min(n_buckets, distinct keys) of them: a week of 20,000 fresh
+``rental_id`` keys touches all 16 fact buckets, so the merge reads
+the whole stored fact table back and rewrites it. The O(touched
+buckets) saving is real only for increments with fewer distinct keys
+than buckets; a rewrite limited to the files that hold a matched key
+(file-granular copy-on-write) is not implemented.
 """
 
 from __future__ import annotations
@@ -72,9 +78,11 @@ class MergeWriter(VersionedTable):
     returns the current rows.
 
     ``n_buckets`` controls incremental-rewrite granularity: more
-    buckets ⇒ smaller rewrites but more files. For a 100 TB table with
-    ~weekly 0.1% increments, thousands of buckets keep each rewrite in
-    the tens-of-GB range.
+    buckets ⇒ smaller rewrites but more files. A write touches about
+    min(n_buckets, distinct keys in the increment) buckets, so more
+    buckets shrink the rewrite only while the increment has fewer
+    distinct keys than buckets; an increment with more keys than
+    buckets rewrites the whole table.
     """
 
     def _commit(self, *args, **kwargs) -> int:

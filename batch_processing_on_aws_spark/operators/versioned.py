@@ -686,7 +686,14 @@ class VersionedTable:
         (null-safe, so null-key rows match and a re-run stays
         idempotent), union the bucket-tagged ``new_b`` rows in, and
         commit the rewritten buckets as a new version whose untouched
-        buckets stay file-shared with the parent."""
+        buckets stay file-shared with the parent.
+
+        ``new_b`` and ``match`` arrive materialized by the caller, the
+        same evaluation ``touched`` was collected from, so every
+        written row lands in a bucket of ``touched`` and the increment
+        is evaluated once. An empty ``touched`` (an empty increment)
+        commits a manifest sharing every parent file without a data
+        write; the version, txn stamp and schema fold still land."""
         pm = self._manifest(parent)
         merged = new_b
         old = self._bucket_rows(spark, pm, touched)
@@ -701,7 +708,6 @@ class VersionedTable:
                 survivors if new_b is None
                 else new_b.unionByName(survivors, allowMissingColumns=True)
             )
-        merged = merged.localCheckpoint(eager=True)
         combined = {
             int(b): list(fs)
             for b, fs in pm["buckets"].items()
@@ -709,8 +715,14 @@ class VersionedTable:
         }
         # a bucket whose rows were ALL dropped writes no files: it must
         # still leave the manifest, so start from the shared set and
-        # add only what the rewrite produced
-        combined.update(self._write_commit(merged))
+        # add only what the rewrite produced. ``merged`` is written
+        # straight from its plan, with no checkpoint: the write goes to
+        # a fresh files/<commit>/ directory and the old bucket files it
+        # reads are immutable (only vacuum deletes them, and a
+        # MergeWriter vacuums after the manifest rename), so the write
+        # never reads a file it replaces
+        if touched:
+            combined.update(self._write_commit(merged))
         return self._commit(
             combined, parent, txn=txn, operation=operation,
             committed_at=committed_at, retry_touched=set(touched),
@@ -728,11 +740,18 @@ class VersionedTable:
         same-key stored rows (null-safe keys), only the touched
         buckets' files are written, and untouched buckets are
         file-shared with the parent manifest. The first write to an
-        empty table is an :meth:`overwrite`."""
+        empty table is an :meth:`overwrite`.
+
+        The increment is evaluated ONCE: it is materialized before its
+        buckets are collected, so the touched-bucket set and the
+        written rows come from the same rows (a non-deterministic
+        ``new`` cannot put a row in a bucket outside ``touched``, which
+        would replace that bucket's files and lose its stored rows).
+        An empty ``new`` commits a version that shares every file."""
         parent = self.latest_version()
         if parent == 0:
             return self.overwrite(new, txn=txn, committed_at=committed_at)
-        new_b = self._bucketed(new)
+        new_b = self._bucketed(new).localCheckpoint(eager=True)
         return self._merge_touched(
             spark, parent, self._buckets_of(new_b), new_b, self.keys, new_b,
             "upsert", txn, committed_at,

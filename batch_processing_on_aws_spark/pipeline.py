@@ -16,7 +16,8 @@ Scale design vs the reference:
 - the reference re-scans ALL weekly files every week
   (``raw/cycling-journey/*/*`` glob, journey-data-transformation.py:28)
   — a scaling bug. Here each increment processes ONLY its own batch
-  and merges by key, rewriting only the key buckets it touches.
+  and merges by key, rewriting only the key buckets it touches (for
+  the fact, a week of fresh rental ids touches every bucket).
 - warehouse-boundary UPSERT (Redshift in the reference,
   init_2_s3_to_redshifht_dag.py:63-74) is owned in-engine by
   MergeWriter (operators/merge.py), so the processed zone itself is
@@ -117,11 +118,14 @@ class JourneyPipeline:
         (merge keys make it idempotent — the §2.9 contract)."""
         raw = read_csv(self.spark, journey_csv, schema=JOURNEY_RAW)
         j = conform(raw, JOURNEY_SPEC)
+        # materialized once: station discovery and the three upserts
+        # below all read the conformed week instead of each re-scanning
+        # and re-parsing the CSV
         j = (
             j.withColumn("start_date", parse_timestamp("start_date"))
             .withColumn("end_date", parse_timestamp("end_date"))
             .withColumn("weather_date", F.to_date("start_date"))
-        )
+        ).localCheckpoint(eager=True)
 
         # New-station discovery (journey-data-transformation.py:65-106):
         # stations seen in the fact but absent from dim_station get
@@ -150,14 +154,21 @@ class JourneyPipeline:
 
         # Fact upsert keyed on rental_id (proc_2…py:64-75). The batch
         # itself may carry duplicate rental_ids → deterministic dedup
-        # first (latest start_date wins).
+        # first (latest start_date wins; the remaining fact columns
+        # break ties, so the winner does not depend on row order).
         fact = dedup_deterministic(
             j.select(
                 "rental_id", "bike_id", "end_date", "end_station",
                 "start_date", "start_station", "weather_date",
             ),
             ["rental_id"],
-            [F.col("start_date").desc()],
+            [
+                F.col(c).desc()
+                for c in (
+                    "start_date", "end_date", "bike_id", "end_station",
+                    "start_station",
+                )
+            ],
         )
         self._fact.upsert(self.spark, fact)
         return fact

@@ -10,6 +10,7 @@ rots into always-pass is worse than none).
 """
 import os
 import sys
+import warnings
 
 sys.path.insert(
     0,
@@ -20,6 +21,14 @@ import check_citations as cc  # noqa: E402
 
 
 def test_no_citation_violations():
+    if not os.path.isdir(cc.REFERENCE_ROOT):
+        # the same words tools/check_citations.py prints: without the
+        # tree check() has nothing to compare against, so the pass below
+        # says nothing and the run's warning summary reports that
+        warnings.warn(
+            f"citation lint inert: reference root {cc.REFERENCE_ROOT} is "
+            "missing, so no citation was checked"
+        )
     assert cc.check() == []
 
 

@@ -84,6 +84,64 @@ def test_full_flow_and_idempotency(pipe):
     assert p.datetime_dim().count() == 7  # 3 from week1 + 4 from week2
 
 
+# Two deliveries of rental 200 that tie on start_date (and end_date)
+# and differ only in bike_id: the fact dedup must not pick by row order.
+DUP_ROWS = (
+    "200,600,12,02/02/2021 08:10,2,Waterloo,02/02/2021 08:00,1,Kings Cross\n",
+    "200,600,13,02/02/2021 08:10,2,Waterloo,02/02/2021 08:00,1,Kings Cross\n",
+)
+
+
+def test_fact_dedup_ignores_input_order(spark, tmp_path, monkeypatch):
+    """Duplicate rental ids with equal start_date keep the same row
+    whatever order the week arrives in: the dedup order runs through
+    every fact column (descending), so bike 13 wins both times."""
+    from batch_processing_on_aws_spark import pipeline
+
+    header = WEEK1_CSV.splitlines(keepends=True)[0]
+    stations = tmp_path / "stations.csv"
+    stations.write_text(STATIONS_CSV)
+
+    def fact_of(name, rows):
+        week = tmp_path / f"{name}.csv"
+        week.write_text(header + "".join(rows))
+        p = JourneyPipeline(spark, WarehousePaths(str(tmp_path / name)))
+        p.bootstrap_stations(str(stations))
+        p.process_journey_batch(str(week))
+        return [tuple(r) for r in p.fact().collect()]
+
+    in_order = fact_of("a", DUP_ROWS)
+    read_csv = pipeline.read_csv
+    monkeypatch.setattr(
+        pipeline, "read_csv", lambda *a, **k: read_csv(*a, **k).repartition(4)
+    )
+    reordered = fact_of("b", DUP_ROWS[::-1])
+    assert in_order == reordered
+    assert len(in_order) == 1 and in_order[0][1] == 13  # bike_id
+
+
+def _newest_job_id(spark) -> int:
+    jobs = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    return jobs.apply(0).jobId() if jobs.size() else -1  # newest first
+
+
+# Spark jobs of one weekly batch on the fixture warehouse, as measured:
+# the conformed week and each keyed increment are materialized once,
+# merges write straight from the plan, and the empty stations upsert
+# writes nothing. The count does not depend on core count or host
+# noise, so a rise means some part of the batch is evaluated again.
+WEEK2_JOBS = 16
+
+
+def test_weekly_batch_job_count(pipe, spark):
+    p, raw = pipe
+    p.process_journey_batch(str(raw / "week1.csv"))
+    before = _newest_job_id(spark)
+    p.process_journey_batch(str(raw / "week2.csv"))
+    jobs = _newest_job_id(spark) - before
+    assert 0 < jobs <= WEEK2_JOBS, jobs
+
+
 def test_weather_sparse_columns_dropped(pipe):
     p, _ = pipe
     cols = p.weather().columns

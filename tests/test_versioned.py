@@ -748,3 +748,86 @@ def test_rollback_never_inherits_newer_schema(spark, tmp_path):
     # the non-empty history is untouched
     assert _snap(spark, vt, v1) == {(1, "a"), (2, "b")}
     assert {r["id"] for r in vt.read(spark, v3).collect()} == {5}
+
+
+def _counting_increment(spark, rows):
+    """An increment whose every evaluation adds one to the returned
+    accumulator per row (a Python UDF on the key column, which bucket
+    discovery and the rewrite both need)."""
+    acc = spark.sparkContext.accumulator(0)
+
+    @F.udf("long")
+    def seen(v):
+        acc.add(1)
+        return v
+
+    return _df(spark, rows).withColumn("id", seen("id")), acc
+
+
+def test_keyed_writes_evaluate_the_increment_once(spark, tmp_path):
+    """upsert and replace_keys run the increment's plan exactly once:
+    bucket discovery and the rewrite read one materialization of it."""
+    vt = VersionedTable(str(tmp_path / "t"), keys=["id"], n_buckets=8)
+    vt.overwrite(_df(spark, [(i, f"v{i}") for i in range(40)]))
+
+    rows = [(i, f"u{i}") for i in range(30, 50)]
+    inc, acc = _counting_increment(spark, rows)
+    vt.upsert(spark, inc)
+    assert acc.value == len(rows)
+    assert _snap(spark, vt) == (
+        {(i, f"v{i}") for i in range(30)} | set(rows)
+    )
+
+    rows = [(i, f"r{i}") for i in range(0, 10)]
+    inc, acc = _counting_increment(spark, rows)
+    vt.replace_keys(spark, inc, match_cols=["id"])
+    assert acc.value == len(rows)
+    assert {r for r in _snap(spark, vt) if r[0] < 10} == set(rows)
+
+
+def test_nondeterministic_increment_never_loses_untouched_buckets(
+    spark, tmp_path
+):
+    """Bucket discovery and the rewrite see the same rows even when the
+    increment's plan is non-deterministic (a random filter): a row
+    written to a bucket outside the discovered set would replace that
+    bucket's files and drop its stored rows."""
+    import os
+
+    # about one row in ten, drawn afresh on every evaluation
+    keep = F.udf(lambda: os.urandom(1)[0] < 26, "boolean").asNondeterministic()
+    vt = VersionedTable(str(tmp_path / "t"), keys=["id"], n_buckets=16)
+    base = {(i, "old") for i in range(200)}
+    vt.overwrite(_df(spark, sorted(base)))
+    candidates = {(i, "new") for i in range(1000, 1060)}
+    for _ in range(3):
+        inc = _df(spark, sorted(candidates)).repartition(4).where(keep())
+        vt.upsert(spark, inc)
+        got = _snap(spark, vt)
+        assert base <= got  # every stored row of every bucket survives
+        assert got - base <= candidates
+
+
+def test_empty_increment_commits_without_a_data_write(spark, tmp_path):
+    """An empty upsert still commits a version (txn stamp, schema fold)
+    but writes no files: the manifest shares every parent file."""
+    import os
+
+    vt = VersionedTable(str(tmp_path / "t"), keys=["id"], n_buckets=4)
+    vt.overwrite(_df(spark, [(i, f"v{i}") for i in range(10)]))
+    files_dir = os.path.join(vt.path, "files")
+    commits = set(os.listdir(files_dir))
+    parent = vt.latest_version()
+
+    v = vt.upsert(spark, _df(spark, []), txn={"app": "a", "epoch": 7})
+    assert v == parent + 1
+    assert set(os.listdir(files_dir)) == commits
+    assert vt._manifest(v)["buckets"] == vt._manifest(parent)["buckets"]
+    assert vt.txn_applied("a", 7)
+    assert _snap(spark, vt) == _snap(spark, vt, parent)
+
+    # an empty increment that carries a new column still folds it in
+    wide = spark.createDataFrame([], "id long, val string, lang string")
+    v = vt.upsert(spark, wide)
+    assert set(os.listdir(files_dir)) == commits
+    assert vt.read(spark, v).columns == ["id", "val", "lang"]
